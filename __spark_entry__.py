@@ -1603,13 +1603,14 @@ def _incremental_match_sql() -> str:
     """
 
 
-def _crawl_entity_map_sql() -> str:
+def _crawl_entity_map_sql(cap: int) -> str:
     """Composed crawl oracle: exact novelty (the Bloom stage's RESULT is
     exact by construction, so the mirror is a NOT-IN on the
     null-coalesced canonical text — content-hash equality modulo sha2
     collisions, the repo's standing hash convention) followed by the
     incremental_match CTEs restricted to novel queries, then the
-    adopt-or-found COALESCE."""
+    adopt-or-found COALESCE. ``cap`` is the engine's block cap
+    (PipelineConfig.max_block_size), applied to both sides."""
     pages = """
         SELECT 'https://' || source || CAST(doc_id % 7 AS VARCHAR)
                  || '.example.com/d/' || CAST(doc_id AS VARCHAR) AS url,
@@ -1620,7 +1621,7 @@ def _crawl_entity_map_sql() -> str:
     z = _feat_z_sql("pa.ntext", "pb.ntext")
     return f"""
         WITH
-        {_er_prefix_sql(pages)},
+        {_er_prefix_sql(pages, cap)},
         histk AS MATERIALIZED (SELECT DISTINCT coalesce(ntext, url) AS k
                  FROM ex WHERE sd = 0),
         novel AS MATERIALIZED (
@@ -1630,11 +1631,11 @@ def _crawl_entity_map_sql() -> str:
         -- batch side's block cap counts NOVEL members only (a block
         -- crowded with suppressed re-crawls must not be dropped).
         -- Re-cap bm over the novel subset instead of reusing bmk's
-        -- full-batch cap; 100 mirrors _er_prefix_sql's default cap.
+        -- full-batch cap.
         keepn AS MATERIALIZED (
           SELECT bm.block_key FROM bm JOIN novel n ON n.url = bm.url
           WHERE bm.sd = 1
-          GROUP BY bm.block_key HAVING COUNT(*) <= 100),
+          GROUP BY bm.block_key HAVING COUNT(*) <= {cap}),
         bmn AS MATERIALIZED (
           SELECT bm.url, bm.block_key FROM bm
           JOIN novel n ON n.url = bm.url
@@ -2197,7 +2198,9 @@ def oracle_sql() -> dict[str, str]:
         """,
         "er_pipeline": _er_pipeline_sql(),
         "incremental_match": _incremental_match_sql(),
-        "crawl_entity_map": _crawl_entity_map_sql(),
+        "crawl_entity_map": _crawl_entity_map_sql(
+            _portable_cfg().max_block_size
+        ),
         "greedy_link": _greedy_link_sql(24),
         # bounded-vocabulary truth-table join (the DM state machine has
         # no general SQL form, but the gate input has exactly 30 distinct

@@ -21,7 +21,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 import pyspark.sql.functions as F
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 
 # The reference's full 20-group address-abbreviation table, canonical
 # form first (clean_donors.py:57-78 address_words, verbatim).
@@ -255,6 +255,32 @@ def extract_text_udf():
     recomputed downstream.
     """
     return F.pandas_udf(_extract_batch, "string")
+
+
+def select_ntext(pages: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns + ``ntext``: THE page normalize chain, shared by
+    the batch pipeline's extract and every stream/crawl content key, so
+    "stream key == batch exact_key" holds by construction.
+
+    html fallback -> normalize_text -> rlike-gated canonicalize_udf.
+    Both UDF inputs are gated JVM-side because pandas-UDF arguments are
+    evaluated unconditionally (no short-circuit through coalesce): the
+    extraction UDF sees html only where ``text IS NULL``, and the
+    canonicalization UDF sees only pages matching the combined
+    abbreviation pattern — the rest ship a null through Arrow instead
+    of their whole text (~2x off the UDF overhead). The two-step select
+    computes the normalize chain once per row: CollapseProject declines
+    to inline a non-cheap expression referenced three times (rlike
+    gate, UDF argument, coalesce fallback).
+    """
+    txt = F.coalesce(
+        F.col("text"),
+        extract_text_udf()(F.when(F.col("text").isNull(), F.col("html"))),
+    )
+    pre = pages.select(*keep, normalize_text(txt).alias("_nt"))
+    c = F.col("_nt")
+    gated = canonicalize_udf()(F.when(c.rlike(any_abbrev_pattern()), c))
+    return pre.select(*keep, F.coalesce(gated, c).alias("ntext"))
 
 
 # URL canonicalization (web-pipeline dedup prefilter): params whose whole

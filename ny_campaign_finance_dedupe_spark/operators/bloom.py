@@ -88,7 +88,8 @@ def build_bloom_index(
     bits_per_key: int = BITS_PER_KEY,
     n_hashes: int = N_HASHES,
 ) -> DataFrame:
-    """One Bloom filter per key-hash bucket: (bucket, m, n_keys, bloom).
+    """One Bloom filter per key-hash bucket:
+    (bucket, m, n_keys, n_buckets, bloom).
 
     The groupBy shuffle carries (bucket, h1, h2) only — the payload
     column is projected away before the exchange, so indexing 10^12
@@ -97,6 +98,8 @@ def build_bloom_index(
     bounds per-task memory: each task materializes one bucket's hashes
     plus its bitmap, so size it to keys/bucket * 16B <~ executor task
     memory at the target scale (the bitmap itself is n*bits_per_key/8).
+    Every row records ``n_buckets`` so a probe keyed with a different
+    bucket count fails instead of missing history (bloom_probe).
     """
     key_col = F.col(key) if isinstance(key, str) else key
     h1, h2 = _hash_cols(key_col)
@@ -124,12 +127,14 @@ def build_bloom_index(
                 "bucket": [int(pdf["bucket"].iloc[0])],
                 "m": [m],
                 "n_keys": [n],
+                "n_buckets": [n_buckets],
                 "bloom": [bits.tobytes()],
             }
         )
 
     return hashed.groupBy("bucket").applyInPandas(
-        _build, "bucket int, m bigint, n_keys bigint, bloom binary"
+        _build,
+        "bucket int, m bigint, n_keys bigint, n_buckets int, bloom binary",
     )
 
 
@@ -164,6 +169,11 @@ def bloom_probe(
     in a batch share few distinct bitmaps, so the Arrow-batched kernel
     factorizes on the blob and tests each group with vectorized numpy
     bit probes.
+
+    A batch row that meets an index row built with a different
+    ``n_buckets`` raises (native ``raise_error``, no extra job): its key
+    hashed to the wrong bucket's bitmap, so a "novel" answer would be
+    silently wrong.
     """
     if strategy == "auto":
         tot_bits = index.agg(F.sum("m")).collect()[0][0] or 0
@@ -179,7 +189,7 @@ def bloom_probe(
             "_h2": h2,
         }
     )
-    idx = index.withColumnRenamed("bucket", "_bb")
+    idx = index.withColumnsRenamed({"bucket": "_bb", "n_buckets": "_nb"})
     if strategy == "broadcast":
         probed = keyed.join(F.broadcast(idx), "_bb", "left")
     elif strategy == "join":
@@ -217,9 +227,20 @@ def bloom_probe(
             out[sel] = hit
         return pd.Series(out)
 
-    return probed.withColumn(
-        "bloom_maybe", _test(F.col("bloom"), F.col("_h1"), F.col("_h2"))
-    ).drop("_bb", "_h1", "_h2", "m", "n_keys", "bloom")
+    mismatch = F.col("_nb") != F.lit(n_buckets)
+    maybe = F.when(
+        mismatch,
+        F.raise_error(
+            F.format_string(
+                f"bloom_probe n_buckets={n_buckets} but the index was"
+                " built with n_buckets=%d",
+                F.col("_nb"),
+            )
+        ),
+    ).otherwise(_test(F.col("bloom"), F.col("_h1"), F.col("_h2")))
+    return probed.withColumn("bloom_maybe", maybe).drop(
+        "_bb", "_h1", "_h2", "_nb", "m", "n_keys", "bloom"
+    )
 
 
 def novel_rows(

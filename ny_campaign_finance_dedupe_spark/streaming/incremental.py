@@ -61,10 +61,32 @@ def match_batch(
     """
     from ..plans.pipeline import DedupePipeline
 
+    return match_extracted(
+        DedupePipeline(cfg).extract(batch),
+        index,
+        cfg,
+        n_matches=n_matches,
+        threshold=threshold,
+    )
+
+
+def match_extracted(
+    ext: DataFrame,
+    index: DataFrame,
+    cfg,
+    n_matches: int = 1,
+    threshold: float | None = None,
+) -> DataFrame:
+    """:func:`match_batch` over rows already through the normalize
+    chain — (url, warc_ts, lang, ntext), DedupePipeline.extract's shape
+    — for callers that hold ntext anyway (the crawl kernel keys every
+    page on it first) and must not pay the html/canonicalize UDFs
+    twice. ``cfg.lang_filter`` is the caller's to apply."""
+    from ..plans.pipeline import DedupePipeline
+
     if threshold is None:
         threshold = getattr(cfg, "score_threshold", 0.5)
     pipe = DedupePipeline(cfg)
-    ext = pipe.extract(batch)
     bm = pipe.block(pipe.signatures(ext))
     qk = bm.join(
         ext.select(F.col("url").alias("record_id"), F.col("ntext").alias("q_ntext")),

@@ -26,57 +26,27 @@ from pyspark.sql import DataFrame
 from ..functions import normalize
 
 
-def content_key(text_col, html_col=None) -> "F.Column":
-    """sha2-256 identity key over the SAME ntext chain the batch
-    pipeline hashes (DedupePipeline.extract -> signatures' exact_key:
-    html fallback, normalize_text, gated abbrev canonicalization), so
-    stream and batch dedup agree on what "the same page" means — an
-    abbreviation variant ('123 Main St' vs '123 Main Street') is ONE
-    page in both. Single-expression form: fine for a key (one consumer);
-    the batch extract's two-step select exists because IT fans ntext out
-    to many downstream expressions."""
-    txt = text_col
-    if html_col is not None:
-        txt = F.coalesce(
-            text_col,
-            normalize.extract_text_udf()(
-                F.when(text_col.isNull(), html_col)
-            ),
-        )
-    nt = normalize.normalize_text(txt)
-    gated = normalize.canonicalize_udf()(
-        F.when(nt.rlike(normalize.any_abbrev_pattern()), nt)
+def keyed_pages(pages: DataFrame, *keep: str) -> DataFrame:
+    """``keep`` columns (``url`` among them) + ``ntext`` + ``exact_key``.
+
+    ``exact_key`` is sha2-256 over the batch pipeline's own ntext chain
+    (normalize.select_ntext: html fallback, normalize_text, gated abbrev
+    canonicalization), so stream and batch dedup agree on what "the
+    same page" means — an abbreviation variant ('123 Main St' vs '123
+    Main Street') is ONE page in both. NULL-normalized texts (no text
+    AND no extractable html) get the url itself as key (never dropped
+    as dups of each other — matching batch, where a null exact_key
+    never forms an exact block, pipeline.predicates)."""
+    return normalize.select_ntext(pages, *keep).withColumn(
+        "exact_key",
+        F.coalesce(F.sha2(F.col("ntext"), 256), F.col("url")),
     )
-    return F.sha2(F.coalesce(gated, nt), 256)
 
 
 def with_content_key(pages: DataFrame) -> DataFrame:
-    """pages(url, warc_ts, html, text, ...) + exact_key. NULL-normalized
-    texts (no text AND no extractable html) get the url itself as key
-    (never dropped as dups of each other — matching batch, where a null
-    exact_key never forms an exact block, pipeline.predicates)."""
-    # two-step select: nt feeds three expressions (rlike gate, UDF arg,
-    # coalesce fallback) — compute the normalize chain once per row
-    nt = normalize.normalize_text(
-        F.coalesce(
-            F.col("text"),
-            normalize.extract_text_udf()(
-                F.when(F.col("text").isNull(), F.col("html"))
-            ),
-        )
-    )
-    pre = pages.withColumn("_nt", nt)
-    gated = normalize.canonicalize_udf()(
-        F.when(
-            F.col("_nt").rlike(normalize.any_abbrev_pattern()), F.col("_nt")
-        )
-    )
-    return pre.withColumn(
-        "exact_key",
-        F.coalesce(
-            F.sha2(F.coalesce(gated, F.col("_nt")), 256), F.col("url")
-        ),
-    ).drop("_nt")
+    """pages(url, warc_ts, html, text, ...) + exact_key (see
+    :func:`keyed_pages`)."""
+    return keyed_pages(pages, *pages.columns).drop("ntext")
 
 
 def start_ingest_dedup(

@@ -177,3 +177,17 @@ def test_bad_strategy_raises(spark, corpus):
     index = bloom.build_bloom_index(corpus, key, n_buckets=4)
     with pytest.raises(ValueError, match="strategy"):
         bloom.bloom_probe(corpus, index, key, n_buckets=4, strategy="nope")
+
+
+def test_probe_with_other_n_buckets_raises(spark, corpus):
+    """An index built with 8 buckets probed as if it had 16: in-history
+    keys hash to the wrong bucket's bitmap and would read as novel.
+    Every index row records its n_buckets, so the probe fails instead."""
+    key = bloom.payload_key(F.col("text"))
+    index = bloom.build_bloom_index(corpus, key, n_buckets=8).localCheckpoint()
+    keyed = corpus.select(F.col("doc_id").alias("record_id"), key.alias("_k"))
+    flagged = bloom.bloom_probe(
+        keyed, index, F.col("_k"), n_buckets=16, strategy="broadcast"
+    )
+    with pytest.raises(Exception, match="n_buckets=8"):
+        flagged.collect()

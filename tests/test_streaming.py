@@ -124,11 +124,17 @@ def test_ingest_dedup_suppresses_recrawls_across_restart(spark, tmp_path):
     assert "https://a.com/3" in urls
     assert "https://a.com/1?recrawl" not in urls
     # normalization-identity: case/punct variants are the SAME page
-    k = ingest.content_key
     df = spark.createDataFrame(
-        [("Page One, Body: TEXT!",), ("page one body text",)], "t string"
+        [
+            ("https://a.com/x", t0, None, "Page One, Body: TEXT!", "en"),
+            ("https://a.com/y", t0, None, "page one body text", "en"),
+        ],
+        PAGES_SCHEMA,
     )
-    keys = {r["k"] for r in df.select(k(F.col("t")).alias("k")).collect()}
+    keys = {
+        r["exact_key"]
+        for r in ingest.with_content_key(df).select("exact_key").collect()
+    }
     assert len(keys) == 1
 
 
@@ -244,19 +250,29 @@ def test_stateful_ingest_dedup_with_counts(spark, tmp_path):
 # ---- composed crawl pipeline (streaming/crawl.py) ----
 
 
+def _persistent_rdds(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def _crawl_history(spark, n_pages, seed, cfg):
+    """(history, keys, bloom index, blocking index), all checkpointed."""
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    pages, _ = synth_pages(spark, n_pages=n_pages, seed=seed, dup_rate=0.0)
+    history = pages.localCheckpoint()
+    keys, bidx = crawl.build_history_index(history, n_buckets=8)
+    index = incremental.build_index(history, cfg).localCheckpoint()
+    return history, keys.localCheckpoint(), bidx.localCheckpoint(), index
+
+
 def test_match_novel_batch_composition(spark, tmp_path):
     """The composed batch kernel: exact re-crawls are suppressed by the
     Bloom stage, near-duplicate novel pages adopt their gazetteer
     match's cluster, fresh pages found singleton clusters."""
     from ny_campaign_finance_dedupe_spark.streaming import crawl
 
-    pages, _ = synth_pages(spark, n_pages=200, seed=11, dup_rate=0.0)
-    history = pages.localCheckpoint()
     cfg = PipelineConfig()
-    keys, bidx = crawl.build_history_index(history, n_buckets=8)
-    keys = keys.localCheckpoint()
-    bidx = bidx.localCheckpoint()
-    index = incremental.build_index(history, cfg).localCheckpoint()
+    history, keys, bidx, index = _crawl_history(spark, 200, 11, cfg)
 
     one = history.limit(1).collect()[0]
     batch = spark.createDataFrame(
@@ -296,18 +312,17 @@ def test_crawl_pipeline_restart_resumes(spark, tmp_path):
     new file."""
     from ny_campaign_finance_dedupe_spark.streaming import crawl
 
-    pages, _ = synth_pages(spark, n_pages=150, seed=13, dup_rate=0.0)
-    history = pages.localCheckpoint()
     cfg = PipelineConfig()
-    keys, bidx = crawl.build_history_index(history, n_buckets=8)
-    keys = keys.localCheckpoint()
-    bidx = bidx.localCheckpoint()
-    index = incremental.build_index(history, cfg).localCheckpoint()
+    history, keys, bidx, index = _crawl_history(spark, 150, 13, cfg)
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "entity_map")
     ckpt = str(tmp_path / "ckpt")
     one = history.limit(1).collect()[0]
+    # not empty: localCheckpointed frames are persisted RDDs too (and
+    # the cleaner may drop other tests' ones mid-run); a tick must add
+    # none
+    cached = _persistent_rdds(spark)
 
     t1 = spark.createDataFrame(
         [
@@ -324,6 +339,10 @@ def test_crawl_pipeline_restart_resumes(spark, tmp_path):
         n_buckets=8,
     )
     q1.awaitTermination(120)
+    # the sink persists each batch's novel set and must release it: a
+    # leak of one cached batch per tick grows executor storage without
+    # bound in a long-running crawl
+    assert _persistent_rdds(spark) - cached == set()
     got1 = spark.read.parquet(out).collect()
     assert {r["record_id"] for r in got1} == {
         "https://t1.example.com/near", "https://t1.example.com/fresh"
@@ -341,6 +360,7 @@ def test_crawl_pipeline_restart_resumes(spark, tmp_path):
         n_buckets=8,
     )
     q2.awaitTermination(120)
+    assert _persistent_rdds(spark) - cached == set()
     got2 = spark.read.parquet(out).collect()
     counts = {}
     for r in got2:
@@ -361,13 +381,8 @@ def test_match_novel_batch_forwards_bloom_strategy(spark):
     the broadcast path."""
     from ny_campaign_finance_dedupe_spark.streaming import crawl
 
-    pages, _ = synth_pages(spark, n_pages=120, seed=17, dup_rate=0.0)
-    history = pages.localCheckpoint()
     cfg = PipelineConfig()
-    keys, bidx = crawl.build_history_index(history, n_buckets=8)
-    keys = keys.localCheckpoint()
-    bidx = bidx.localCheckpoint()
-    index = incremental.build_index(history, cfg).localCheckpoint()
+    history, keys, bidx, index = _crawl_history(spark, 120, 17, cfg)
     one = history.limit(1).collect()[0]
     batch = spark.createDataFrame(
         [
@@ -389,3 +404,63 @@ def test_match_novel_batch_forwards_bloom_strategy(spark):
         )
     assert rows["broadcast"] == rows["join"]
     assert [r[0] for r in rows["join"]] == ["https://fresh.example.com/y"]
+
+
+def test_crawl_kernel_runs_html_extraction_once_per_page(spark):
+    """The normalize chain's UDFs are opaque to Catalyst, so each plan
+    branch that reaches the raw batch re-runs them. The keying step may
+    reach it once per novel_rows branch (bloom-certain / confirmed);
+    the match step must read carried ntext only — over a materialized
+    novel set its plan holds no html extraction at all.
+    (localCheckpoint, not persist: a persisted frame's plan string also
+    prints the cached child plan.)"""
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    def n_extract(df):
+        return df._jdf.queryExecution().executedPlan().toString().count(
+            "_extract_batch("
+        )
+
+    cfg = PipelineConfig()
+    history, keys, bidx, index = _crawl_history(spark, 60, 23, cfg)
+    batch, _ = synth_pages(spark, n_pages=20, seed=24, dup_rate=0.0)
+    novel = crawl.novel_pages(
+        batch, keys, bidx, n_buckets=8, strategy="broadcast"
+    )
+    assert n_extract(novel) <= 2
+    rows = crawl.entity_map_rows(novel.localCheckpoint(), index, cfg)
+    assert n_extract(rows) == 0
+    assert rows.count() == 20
+
+
+def test_crawl_lang_filter_narrows_matching_only(spark):
+    """cfg.lang_filter applies to the gazetteer match, not to the entity
+    map: a novel page in another language still founds its singleton
+    row (unmatched even though it near-duplicates a history page),
+    while an in-language near-duplicate still matches."""
+    from ny_campaign_finance_dedupe_spark.streaming import crawl
+
+    cfg = PipelineConfig(lang_filter="en")
+    history, keys, bidx, index = _crawl_history(spark, 120, 19, cfg)
+    one = history.where(F.col("lang") == "en").limit(1).collect()[0]
+    batch = spark.createDataFrame(
+        [
+            ("https://near.example.com/en", one["warc_ts"], None,
+             one["text"] + " zzzextra", "en"),
+            ("https://near.example.com/xx", one["warc_ts"], None,
+             one["text"] + " yyyextra", "xx"),
+        ],
+        PAGES_SCHEMA,
+    )
+    out = {
+        r["record_id"]: r
+        for r in crawl.match_novel_batch(
+            batch, keys, bidx, index, cfg, n_buckets=8
+        ).collect()
+    }
+    en = out["https://near.example.com/en"]
+    assert en["matched"] and en["cluster_id"] == one["url"]
+    xx = out["https://near.example.com/xx"]
+    assert not xx["matched"]
+    assert xx["cluster_id"] == xx["record_id"]
+    assert xx["cluster_score"] == 1.0
