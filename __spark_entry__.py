@@ -1024,19 +1024,6 @@ def q_crawl_entity_map(spark, sf_dir):
     )
 
 
-def q_salted_pairs(spark, sf_dir):
-    """Skew-safe pair generation: hot-key bucket-grid salting MUST equal
-    the plain blocking self-join (same oracle as
-    blocking_first_token_pairs — that equality IS the check)."""
-    docs = _t(spark, sf_dir, "documents")
-    bm = blocking.build_blocking_map(
-        docs, "doc_id", {"ft": keygen.first_token(F.col("text"))}
-    )
-    return pairs_ops.salted_candidate_pairs(bm, hot_threshold=20, salt=8).orderBy(
-        "src", "dst"
-    )
-
-
 def q_identity_join(spark, sf_dir):
     """J5 (init_postgres_db.py:255-295): exact-identity join on
     null-coalesced multi-column equality — Spark's null-safe <=> is the
@@ -1254,7 +1241,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_entity_map": q_crawl_entity_map,
         # -- no CORRECTNESS_r04 row (past the 50-query cap) — lead r5 --
         "identity_join": q_identity_join,
-        "salted_pairs": q_salted_pairs,
         "media_features": q_media_features,
         "greedy_link": q_greedy_link,
         "hac_refine": q_hac_refine,
@@ -2053,16 +2039,6 @@ def oracle_sql() -> dict[str, str]:
         "hundred_buckets": """
             SELECT (o_orderkey // 100 * 100) AS bucket, COUNT(*) AS n
             FROM orders GROUP BY 1 ORDER BY bucket
-        """,
-        "salted_pairs": """
-            WITH b AS (
-              SELECT doc_id, split_part(text, ' ', 1) AS k
-              FROM documents WHERE text IS NOT NULL
-                AND split_part(text, ' ', 1) <> ''
-            )
-            SELECT DISTINCT l.doc_id AS src, r.doc_id AS dst
-            FROM b l JOIN b r ON l.k = r.k AND l.doc_id < r.doc_id
-            ORDER BY src, dst
         """,
         "identity_join": """
             WITH d2 AS (

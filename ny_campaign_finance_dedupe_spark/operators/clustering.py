@@ -414,7 +414,7 @@ def split_oversize_components(
 ) -> DataFrame:
     """C2 (clustering.py:63-98): components over ``max_component`` members
     re-filter their edges at logit(min kept score) + 1 and re-cluster,
-    recursing (bounded). The semantic skew guard on top of salting/AQE.
+    recursing (bounded). The semantic skew guard on top of the block cap/AQE.
 
     ``report``, when given, records engagement evidence — extra cost is
     one count on the (tiny) oversize-id list plus one max() over the

@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from ..functions import hashing, keygen, portable
+from . import pairs
 
 
 def _tag_persisted(out: DataFrame, *deps: DataFrame) -> DataFrame:
@@ -254,6 +255,18 @@ def winnow_jaccard_pairs(
     return _postings_jaccard_pairs(postings, threshold, df_cap)
 
 
+def _band_pairs(keyed: DataFrame, band_keys: Column, payload: str) -> DataFrame:
+    """Distinct (src, dst) pairs of ``keyed(record_id, payload)`` sharing
+    any of the per-record ``band_keys``, hydrated with ``<payload>_a`` /
+    ``<payload>_b``: the blocking self-join (pairs.candidate_pairs) and
+    its ids-only hydration (pairs.hydrate_pairs). ``keyed`` feeds the key
+    explode and both hydration sides, so callers persist it."""
+    bm = keyed.select("record_id", F.explode(band_keys).alias("block_key"))
+    return pairs.hydrate_pairs(
+        pairs.candidate_pairs(bm), keyed, "record_id", [payload]
+    )
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -287,23 +300,9 @@ def minhash_candidate_pairs(
         # without a persist the signature UDF subtree evaluates 3x.
         .persist()
     )
-    bm = sig.select(
-        "record_id",
-        F.explode(hashing.minhash_band_keys(F.col("sig"), bands, rows)).alias(
-            "block_key"
-        ),
+    hyd = _band_pairs(
+        sig, hashing.minhash_band_keys(F.col("sig"), bands, rows), "sig"
     )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    sa = sig.select(F.col("record_id").alias("src"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("record_id").alias("dst"), F.col("sig").alias("sig_b"))
     est = (
         F.size(
             F.filter(
@@ -314,9 +313,7 @@ def minhash_candidate_pairs(
         / F.lit(num_perm)
     )
     return _tag_persisted(
-        cand.join(sa, "src")
-        .join(sb, "dst")
-        .select("src", "dst", est.alias("est_jaccard"))
+        hyd.select("src", "dst", est.alias("est_jaccard"))
         .where(F.col("est_jaccard") >= est_threshold),
         sig,
     )
@@ -345,27 +342,11 @@ def edit_distance_pairs(
         .where(F.col("k").isNotNull() & (F.length("k") > 0))
         .persist()  # reused by the variant explode and both hydrations
     )
-    bm = keyed.select(
-        "record_id",
-        F.explode(keygen.deletion_variants(F.col("k"), key_len)).alias(
-            "block_key"
-        ),
+    hyd = _band_pairs(
+        keyed, keygen.deletion_variants(F.col("k"), key_len), "k"
     )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    ka = keyed.select(F.col("record_id").alias("src"), F.col("k").alias("k_a"))
-    kb = keyed.select(F.col("record_id").alias("dst"), F.col("k").alias("k_b"))
     return _tag_persisted(
-        cand.join(ka, "src")
-        .join(kb, "dst")
-        .select(
+        hyd.select(
             "src", "dst", F.levenshtein(F.col("k_a"), F.col("k_b")).alias("dist")
         )
         .where(F.col("dist") <= max_dist),
@@ -401,23 +382,9 @@ def minhash_candidate_pairs_portable(
         .select("record_id", "sig")
         .persist()
     )
-    bm = sig.select(
-        "record_id",
-        F.explode(portable.minhash_band_keys(F.col("sig"), bands, rows)).alias(
-            "block_key"
-        ),
+    hyd = _band_pairs(
+        sig, portable.minhash_band_keys(F.col("sig"), bands, rows), "sig"
     )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    sa = sig.select(F.col("record_id").alias("src"), F.col("sig").alias("sig_a"))
-    sb = sig.select(F.col("record_id").alias("dst"), F.col("sig").alias("sig_b"))
     est = (
         F.size(
             F.filter(
@@ -428,9 +395,7 @@ def minhash_candidate_pairs_portable(
         / F.lit(float(num_perm))
     )
     return _tag_persisted(
-        cand.join(sa, "src")
-        .join(sb, "dst")
-        .select("src", "dst", est.alias("est_jaccard"))
+        hyd.select("src", "dst", est.alias("est_jaccard"))
         .where(F.col("est_jaccard") >= est_threshold),
         sig,
     )
@@ -462,26 +427,18 @@ def simhash_near_pairs_portable(
         .select("record_id", "simhash")
         .persist()
     )
-    bm = sh.select(
-        "record_id",
-        F.explode(
-            portable.simhash_band_keys(F.col("simhash"), bands, bits=32)
-        ).alias("block_key"),
+    hyd = _band_pairs(
+        sh,
+        portable.simhash_band_keys(F.col("simhash"), bands, bits=32),
+        "simhash",
     )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    ha = sh.select(F.col("record_id").alias("src"), F.col("simhash").alias("h_a"))
-    hb = sh.select(F.col("record_id").alias("dst"), F.col("simhash").alias("h_b"))
     return _tag_persisted(
-        cand.join(ha, "src")
-        .join(hb, "dst")
-        .select(
-            "src", "dst", hashing.hamming64(F.col("h_a"), F.col("h_b")).alias("hamming")
+        hyd.select(
+            "src",
+            "dst",
+            hashing.hamming64(F.col("simhash_a"), F.col("simhash_b")).alias(
+                "hamming"
+            ),
         )
         .where(F.col("hamming") <= max_hamming),
         sh,
@@ -511,26 +468,16 @@ def simhash_near_pairs(
         .select("record_id", "simhash")
         .persist()  # reused 3x (band explode + both hydration sides)
     )
-    bm = sh.select(
-        "record_id",
-        F.explode(hashing.simhash_band_keys(F.col("simhash"), bands)).alias(
-            "block_key"
-        ),
+    hyd = _band_pairs(
+        sh, hashing.simhash_band_keys(F.col("simhash"), bands), "simhash"
     )
-    cand = (
-        bm.alias("l")
-        .join(bm.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    ha = sh.select(F.col("record_id").alias("src"), F.col("simhash").alias("h_a"))
-    hb = sh.select(F.col("record_id").alias("dst"), F.col("simhash").alias("h_b"))
     return _tag_persisted(
-        cand.join(ha, "src")
-        .join(hb, "dst")
-        .select(
-            "src", "dst", hashing.hamming64(F.col("h_a"), F.col("h_b")).alias("hamming")
+        hyd.select(
+            "src",
+            "dst",
+            hashing.hamming64(F.col("simhash_a"), F.col("simhash_b")).alias(
+                "hamming"
+            ),
         )
         .where(F.col("hamming") <= max_hamming),
         sh,

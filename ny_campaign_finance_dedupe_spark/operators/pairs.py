@@ -14,20 +14,15 @@ Scale notes:
 - blocks are pre-capped (operators/blocking.py), so per-key fan-out is
   bounded: the join output is at most max_block^2/2 x n_keys rows.
 - the blocking map is persisted by the caller when used on both sides.
-- ``pairs_via_cogroup`` is the alternative physical strategy from the
-  north_star ("salted groupBy-cogroup"): one shuffle on block_key, pairs
-  emitted per-block in Arrow batches. Same semantics; pick by block-size
-  profile (join wins when blocks are small and keys many; cogroup wins
-  when payload should be carried once per record rather than re-joined).
+- skew is handled by that absolute cap plus AQE's skew-join splitting
+  (session.py), not by a per-operator strategy switch: this is the
+  package's one blocking self-join — the pipeline's pairs stage and the
+  banded near-dup operators (operators/dedup.py) all call it.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 import pyspark.sql.functions as F
-import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
 
@@ -46,34 +41,6 @@ def candidate_pairs(blocking_map: DataFrame) -> DataFrame:
     )
 
 
-def pairs_via_cogroup(blocking_map: DataFrame) -> DataFrame:
-    """Same contract as ``candidate_pairs`` via groupBy(block_key) +
-    applyInPandas emitting the triangle per block — one shuffle, no join.
-    Blocks must already be capped (bounded memory per group)."""
-    out_schema = T.StructType(
-        [
-            T.StructField("src", blocking_map.schema["record_id"].dataType, False),
-            T.StructField("dst", blocking_map.schema["record_id"].dataType, False),
-        ]
-    )
-
-    def emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["record_id"].drop_duplicates().sort_values().to_numpy()
-        n = len(ids)
-        if n < 2:
-            return pd.DataFrame({"src": ids[:0], "dst": ids[:0]})
-        import numpy as np
-
-        iu = np.triu_indices(n, k=1)
-        return pd.DataFrame({"src": ids[iu[0]], "dst": ids[iu[1]]})
-
-    return (
-        blocking_map.groupBy("block_key")
-        .applyInPandas(emit, schema=out_schema)
-        .dropDuplicates(["src", "dst"])
-    )
-
-
 def hydrate_pairs(
     pairs: DataFrame, records: DataFrame, id_col: str, payload_cols: list[str]
 ) -> DataFrame:
@@ -88,59 +55,6 @@ def hydrate_pairs(
         F.col(id_col).alias("dst"), *[F.col(c).alias(f"{c}_b") for c in payload_cols]
     )
     return pairs.join(a, "src").join(b, "dst")
-
-
-def salted_candidate_pairs(
-    blocking_map: DataFrame,
-    hot_threshold: int = 1_000,
-    salt: int = 16,
-) -> DataFrame:
-    """Candidate pairs with explicit hot-key salting (north_rule skew
-    handling, alongside the block cap and AQE skew-join).
-
-    Semantics are IDENTICAL to ``candidate_pairs`` — every co-blocked
-    pair is still emitted — but a hot key's triangle is computed as a
-    bucket grid: each record lands in bucket h = hash(id) % salt, and
-    the left side replicates to every bucket pair (b, b2>=b), so one
-    task never holds more than (m/salt)^2 of a hot block's pair space.
-    Replication factor ~salt/2 on the hot keys only; cold keys take the
-    plain self-join path. This is the completeness-preserving form of
-    salting (a per-bucket-only join would silently drop cross-bucket
-    pairs).
-    """
-    sizes = blocking_map.groupBy("block_key").count()
-    hot_keys = sizes.where(F.col("count") > hot_threshold).select("block_key")
-    cold = blocking_map.join(F.broadcast(hot_keys), "block_key", "left_anti")
-    cold_pairs = (
-        cold.alias("l")
-        .join(cold.alias("r"), "block_key")
-        .where(F.col("l.record_id") < F.col("r.record_id"))
-        .select(
-            F.col("l.record_id").alias("src"), F.col("r.record_id").alias("dst")
-        )
-    )
-    hot = blocking_map.join(F.broadcast(hot_keys), "block_key", "left_semi")
-    hot = hot.withColumn(
-        "bucket", F.pmod(F.xxhash64("record_id"), F.lit(salt)).cast("int")
-    )
-    l = hot.withColumn(
-        "b2", F.explode(F.sequence(F.col("bucket"), F.lit(salt - 1)))
-    ).select("block_key", F.col("record_id").alias("src"), "b2")
-    r = hot.select(
-        "block_key", F.col("record_id").alias("dst"), F.col("bucket").alias("b2")
-    )
-    # canonicalize with least/greatest, NOT src<dst: a pair whose
-    # exploding-side id is the larger one would otherwise be dropped
-    # (the grid only guarantees one of the two orientations appears).
-    hot_pairs = (
-        l.join(r, ["block_key", "b2"])
-        .where(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("src"),
-            F.greatest("src", "dst").alias("dst"),
-        )
-    )
-    return cold_pairs.unionByName(hot_pairs).dropDuplicates(["src", "dst"])
 
 
 def record_link_pairs(bm_a: DataFrame, bm_b: DataFrame) -> DataFrame:

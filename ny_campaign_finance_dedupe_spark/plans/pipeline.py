@@ -49,13 +49,9 @@ class PipelineConfig:
     # xxhash64+Arrow fast path — the correctness-gate configuration, not
     # the bench one. Use 16 perms / 8x2 banding with it.
     portable_hashing: bool = False
+    # absolute block cap (canopy stop-word analog): the one skew guard
+    # the pairs stage needs, alongside AQE skew-join splitting
     max_block_size: int = 100
-    # candidate generation strategy: "join" (plain self-join + AQE),
-    # "salted" (hot-key bucket grid, pairs.salted_candidate_pairs), or
-    # "cogroup" (north_star's groupBy-cogroup emission)
-    pair_strategy: str = "join"
-    salt_hot_threshold: int = 1_000
-    salt: int = 16
     score_threshold: float = 0.5
     # optional C3 refinement: re-cluster each CC component with HAC cut
     # at (1 - score_threshold) — the reference's per-component
@@ -64,21 +60,6 @@ class PipelineConfig:
     use_hac: bool = False
     max_component: int = clustering.MAX_COMPONENT
     lang_filter: str | None = None
-    # Compact block keys to 64-bit xxhash64 before the blocking map is
-    # checkpointed / shuffled. The string keys ("mh|<band>|<hex>",
-    # "dom_sh|<domain>|<band>", ~30-60 bytes) are only ever compared for
-    # EQUALITY downstream (cap count, pair self-join, salt grid), so an
-    # 8-byte injective-enough stand-in carries the same information at
-    # ~1/5 the shuffle + checkpoint byte volume — the block stage is the
-    # pipeline's most bandwidth-bound after signatures (2->8-core
-    # executor-CPU inflation +29-134% across the round-4 telemetry
-    # draws, BASELINE.md). Collisions merge two blocks (~26M keys in a
-    # 64-bit space: P(any) ~ 2e-5 at 2M pages) which only ADDS candidate
-    # pairs that scoring then rejects — never drops a true pair.
-    # None = compact exactly when the fast hash family runs; the
-    # portable family keeps strings so the DuckDB oracle can recompute
-    # every key (functions/portable.py contract).
-    compact_block_keys: bool | None = None
     model: dict = field(
         default_factory=lambda: scoring.LogisticModel().to_dict()
     )
@@ -193,25 +174,24 @@ class DedupePipeline:
 
     def block(self, extracted: DataFrame) -> DataFrame:
         bm = blocking.build_blocking_map(extracted, "url", self.predicates())
-        compact = self.cfg.compact_block_keys
-        if compact is None:
-            compact = not self.cfg.portable_hashing
-        if compact:
-            # before cap_blocks so BOTH shuffles of the map (cap count +
-            # pair join) and the stage checkpoint carry 8-byte longs
+        if not self.cfg.portable_hashing:
+            # Compact the string keys ("mh|<band>|<hex>",
+            # "dom_sh|<domain>|<band>", ~30-60 bytes) to 64-bit xxhash64.
+            # They are only ever compared for EQUALITY downstream (cap
+            # count, pair self-join), so an 8-byte stand-in carries the
+            # same information at ~1/5 the shuffle + checkpoint bytes.
+            # Done before cap_blocks so BOTH shuffles of the map and the
+            # stage checkpoint carry longs. A collision merges two blocks
+            # (~26M keys in a 64-bit space: P(any) ~ 2e-5 at 2M pages),
+            # which only ADDS candidate pairs that scoring then rejects.
+            # The portable family keeps strings so the DuckDB oracle can
+            # recompute every key (functions/portable.py contract).
             bm = bm.select(
                 F.xxhash64("block_key").alias("block_key"), "record_id"
             )
         return blocking.cap_blocks(bm, self.cfg.max_block_size)
 
     def gen_pairs(self, blocking_map: DataFrame) -> DataFrame:
-        cfg = self.cfg
-        if cfg.pair_strategy == "salted":
-            return pairs.salted_candidate_pairs(
-                blocking_map, cfg.salt_hot_threshold, cfg.salt
-            )
-        if cfg.pair_strategy == "cogroup":
-            return pairs.pairs_via_cogroup(blocking_map)
         return pairs.candidate_pairs(blocking_map)
 
     def score(self, cand: DataFrame, extracted: DataFrame) -> DataFrame:

@@ -551,38 +551,22 @@ def test_frame_sample_plan(spark):
     assert bytes(frames[0]["frame_payload"]) == bytes(range(30))
 
 
-def test_salted_candidate_pairs_matches_plain(spark):
-    """Salting must preserve the exact pair set of the plain self-join
-    (completeness under skew — north_rule)."""
-    import pyspark.sql.functions as F
+def test_cap_blocks_keeps_at_threshold_drops_above(spark):
+    """The block cap (canopy stop-word rule) on both sides of its
+    threshold: a block of exactly ``max_block_size`` records survives,
+    one record fewer allowed drops it whole, and blocks under the cap
+    pass through untouched either way."""
+    from ny_campaign_finance_dedupe_spark.operators import blocking
 
-    from ny_campaign_finance_dedupe_spark.operators import pairs as P
-
-    rows = [("hot", f"r{i:03d}") for i in range(40)] + [
-        ("cold1", "a"), ("cold1", "b"), ("cold2", "c")
-    ]
+    cold = [("cold1", "a"), ("cold1", "b"), ("cold2", "c")]
+    rows = [("hot", f"r{i:03d}") for i in range(40)] + cold
     bm = spark.createDataFrame(rows, "block_key string, record_id string")
-    plain = {
-        (r["src"], r["dst"]) for r in P.candidate_pairs(bm).collect()
-    }
-    salted = {
-        (r["src"], r["dst"])
-        for r in P.salted_candidate_pairs(bm, hot_threshold=10, salt=4).collect()
-    }
-    assert salted == plain
-    assert len(plain) == 40 * 39 // 2 + 1
 
+    def kept(cap):
+        return sorted(map(tuple, blocking.cap_blocks(bm, cap).collect()))
 
-def test_cogroup_pairs_match_join_pairs(spark):
-    """The two physical pair-generation strategies are semantically
-    identical (north_star's salted groupBy-cogroup alternative)."""
-    from ny_campaign_finance_dedupe_spark.operators import pairs as P
-
-    rows = [("k1", 3), ("k1", 1), ("k1", 2), ("k2", 5), ("k2", 4), ("k3", 9)]
-    bm = spark.createDataFrame(rows, "block_key string, record_id long")
-    a = {(r["src"], r["dst"]) for r in P.candidate_pairs(bm).collect()}
-    b = {(r["src"], r["dst"]) for r in P.pairs_via_cogroup(bm).collect()}
-    assert a == b == {(1, 2), (1, 3), (2, 3), (4, 5)}
+    assert kept(40) == sorted(rows)
+    assert kept(39) == sorted(cold)
 
 
 def test_quantizer_parity_across_physical_paths(spark):

@@ -177,45 +177,39 @@ def test_synth_emits_both_duplicate_classes(spark):
     assert noisy > 0, "no render-noise-only near-duplicates planted"
 
 
-def test_skewed_corpus_salted_equals_join(spark):
-    """north_rule skew handling, pinned end-to-end (VERDICT r03 #4): on
+def test_skewed_corpus_oversize_blocks_capped(spark):
+    """Skew handling under the defaults, end to end (VERDICT r03 #4): on
     a corpus with planted blocking-key skew (10% of pages are
-    boilerplate template pages in 4 hot families — hot domain + hot
-    minhash bands each), the salted bucket-grid pair strategy must
-    produce the IDENTICAL entity map to the plain self-join: salting is
-    a physical-plan choice, never a semantic one. Config admits the hot
-    blocks (cap above family size) and salts them (threshold below)."""
+    boilerplate template pages in ONE hot family — hot domain + hot
+    minhash bands, ~200 pages, twice the default cap), the raw blocking
+    map has blocks over the cap, none survive ``block()``, and the
+    pipeline still maps every page to exactly one entity."""
+    from ny_campaign_finance_dedupe_spark.operators import blocking
+
     pages, _ = synth_pages(
         spark, n_pages=2000, seed=11,
-        skew_domain_frac=0.10, skew_templates=4,
+        skew_domain_frac=0.10, skew_templates=1,
     )
     pages = pages.localCheckpoint()
-    maps = {}
-    for strategy in ("join", "salted"):
-        cfg = PipelineConfig(
-            pair_strategy=strategy,
-            max_block_size=500,       # family blocks (~50 pages) survive
-            salt_hot_threshold=20,    # ...and take the salted grid
-            salt=4,
+    cfg = PipelineConfig()
+    pipe = DedupePipeline(cfg)
+    ext = pipe.extract(pages).localCheckpoint()
+    signed = pipe.signatures(ext).localCheckpoint()
+
+    def over_cap(bm):
+        return (
+            bm.groupBy("block_key").count()
+            .where(F.col("count") > cfg.max_block_size).count()
         )
-        pipe = DedupePipeline(cfg)
-        ext = pipe.extract(pages).localCheckpoint()
-        bm = pipe.block(pipe.signatures(ext)).localCheckpoint()
-        if strategy == "salted":
-            # the stress is real: at least one block is over the salt
-            # threshold, so the grid path actually executes
-            hot = (
-                bm.groupBy("block_key").count()
-                .where(F.col("count") > cfg.salt_hot_threshold).count()
-            )
-            assert hot > 0, "no hot blocks - skew knob failed to plant skew"
-        cand = pipe.gen_pairs(bm)
-        scored = pipe.score(cand, ext)
-        em = pipe.cluster(scored, ext)
-        maps[strategy] = {
-            (r["record_id"], r["cluster_id"]) for r in em.collect()
-        }
-    assert maps["join"] == maps["salted"]
+
+    raw = blocking.build_blocking_map(signed, "url", pipe.predicates())
+    assert over_cap(raw) > 0, "skew knob failed to plant oversize blocks"
+    bm = pipe.block(signed).localCheckpoint()
+    assert over_cap(bm) == 0
+    em = pipe.cluster(pipe.score(pipe.gen_pairs(bm), ext), ext)
+    n_pages = pages.count()
+    assert em.count() == n_pages
+    assert em.select("record_id").distinct().count() == n_pages
 
 
 def test_synth_skew_zero_is_byte_identical(spark):
@@ -238,30 +232,40 @@ def test_synth_skew_zero_is_byte_identical(spark):
 
 
 def test_compact_block_keys_semantics_and_type(spark):
-    """Block-key compaction (fast-family default) is a physical choice,
-    never a semantic one: the 64-bit xxhash64 keys must yield the
-    IDENTICAL entity map to the string keys on the same corpus, and the
-    compact map must actually carry longs (8 bytes/key through the cap
-    shuffle, the pair self-join, and the stage checkpoint) while the
+    """Block-key compaction (the fast family's ``block()``) is a physical
+    choice, never a semantic one: the 64-bit xxhash64 keys must yield
+    the IDENTICAL entity map to the string keys on the same corpus, and
+    the compact map must actually carry longs (8 bytes/key through the
+    cap shuffle, the pair self-join, and the stage checkpoint) while the
     portable family keeps oracle-recomputable strings."""
     from pyspark.sql.types import LongType, StringType
 
+    from ny_campaign_finance_dedupe_spark.operators import blocking
+
     pages, _ = synth_pages(spark, n_pages=1200, seed=7)
     pages = pages.localCheckpoint()
+    cfg = PipelineConfig()
+    pipe = DedupePipeline(cfg)
+    ext = pipe.extract(pages).localCheckpoint()
+    signed = pipe.signatures(ext)
+    string_bm = blocking.cap_blocks(
+        blocking.build_blocking_map(signed, "url", pipe.predicates()),
+        cfg.max_block_size,
+    )
     maps = {}
-    for compact in (False, True):
-        pipe = DedupePipeline(PipelineConfig(compact_block_keys=compact))
-        ext = pipe.extract(pages).localCheckpoint()
-        bm = pipe.block(pipe.signatures(ext)).localCheckpoint()
-        want = LongType() if compact else StringType()
+    for want, bm in (
+        (StringType(), string_bm),
+        (LongType(), pipe.block(signed)),
+    ):
+        bm = bm.localCheckpoint()
         assert bm.schema["block_key"].dataType == want
         scored = pipe.score(pipe.gen_pairs(bm), ext)
         em = pipe.cluster(scored, ext)
-        maps[compact] = {
+        maps[want] = {
             (r["record_id"], r["cluster_id"]) for r in em.collect()
         }
-    assert maps[False] == maps[True]
-    # the portable family resolves the None default to strings
+    assert maps[StringType()] == maps[LongType()]
+    # the portable family keeps string keys
     pipe = DedupePipeline(PipelineConfig(portable_hashing=True))
     bm = pipe.block(pipe.signatures(pipe.extract(pages.limit(50))))
     assert bm.schema["block_key"].dataType == StringType()

@@ -11,12 +11,12 @@ subprocess (fresh JVM):
                  are DROPPED (drop counts reported) and wall-clock stays
                  at the uniform corpus's level instead of detonating on
                  a (0.2N)^2 self-join.
-- ``salted_c2``: 2% of pages across 50 template families (~N*0.02/50
-                 pages each), cap raised to admit them, salt threshold
-                 below them, max_component below the family size,
-                 pair_strategy='salted' — shows the salted bucket grid
-                 AND the C2 oversize re-threshold engaging (hot-key
-                 count, split rounds, pre/post max cluster size).
+- ``hot_c2``:    2% of pages across 50 template families (~N*0.02/50
+                 pages each), cap raised to admit them, max_component
+                 below the family size — shows the plain self-join
+                 (with AQE skew-join splitting) on admitted hot blocks
+                 AND the C2 oversize re-threshold engaging (split
+                 rounds, pre/post max cluster size).
 
 Usage:
     python tools/skew_bench.py --pages 1000000 --cores 8
@@ -36,7 +36,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-MODES = ("uniform", "mega", "salted_c2")
+MODES = ("uniform", "mega", "hot_c2")
 
 
 def mode_params(mode: str) -> dict:
@@ -44,17 +44,11 @@ def mode_params(mode: str) -> dict:
         return dict(skew_domain_frac=0.0, skew_templates=1, cfg={})
     if mode == "mega":
         return dict(skew_domain_frac=0.20, skew_templates=1, cfg={})
-    if mode == "salted_c2":
+    if mode == "hot_c2":
         return dict(
             skew_domain_frac=0.02,
             skew_templates=50,
-            cfg=dict(
-                pair_strategy="salted",
-                max_block_size=2000,
-                salt_hot_threshold=100,
-                salt=8,
-                max_component=100,
-            ),
+            cfg=dict(max_block_size=2000, max_component=100),
         )
     raise ValueError(mode)
 
@@ -109,13 +103,6 @@ def worker(mode: str, pages_n: int, cores: int, seed: int) -> None:
     )
     bm = blocking.cap_blocks(bm_raw, cfg.max_block_size).persist()
     ev["bm_rows_dropped_by_cap"] = raw_rows - bm.count()
-    ev["hot_keys_salted"] = (
-        sizes.where(F.col("count") > cfg.salt_hot_threshold)
-        .where(F.col("count") <= cfg.max_block_size)
-        .count()
-        if cfg.pair_strategy == "salted"
-        else None
-    )
     sizes.unpersist()
     bm_raw.unpersist()
     cand = pipe.gen_pairs(bm)
